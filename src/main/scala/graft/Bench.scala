@@ -23,9 +23,10 @@ import java.nio.file.{Files, Paths}
   *    2 s median — r13), up to `MaxRetries` (2) extra shots are taken and the
   *    tightest window of ALL shots is what's reported; the discarded
   *    shots and retry count ride in `bench_result.json`, and a query
-  *    whose best window STILL exceeds the gate is flagged
-  *    `"contended":true` — the artifact says "this number is soft"
-  *    instead of the reader discovering it four rounds later;
+  *    whose best window STILL exceeds the gate, or that discarded a
+  *    much faster shot, is flagged `"contended":true` — the artifact
+  *    says "this number is soft" instead of the reader discovering it
+  *    four rounds later;
   *  - streaming setup isolation: the six streaming queries (q44/q45/q62/
   *    q79/q99/q140) pay a fresh
   *    streaming-session + state-store setup on every run; `setup` reports
@@ -34,10 +35,9 @@ import java.nio.file.{Files, Paths}
   *    pure fixed cost a long-lived production stream would amortize away;
   *  - failures recorded per-query as -1 + an `"errors"` map, never
   *    swallowed;
-  *  - the result JSON is written full-fidelity (per-query median/min/max
-  *    + every raw run) to `bench_result.json`, and a COMPACT copy is the
-  *    final stdout line — the driver keeps only a 2000-char stdout tail,
-  *    so the line must fit that window whole or it can't be parsed.
+  *  - one record: the full-fidelity result JSON (per-query
+  *    median/min/max + every raw run) is written to `bench_result.json`
+  *    and printed, byte-identical, as the single stdout line.
   */
 object Bench {
   /** Timed runs per query (post-warmup). 3 is the floor where a median
@@ -70,8 +70,8 @@ object Bench {
 
   /** Per-query retry record carried into `bench_result.json`: how many
     * extra shots the spread gate took, which shots the tightest-window
-    * selection discarded, and whether the best window STILL exceeds the
-    * gate (the number is soft — read it with its canary).
+    * selection discarded, and whether the number is soft (read it with
+    * its canary) — see [[settle]] for when that holds.
     */
   private[graft] final case class Retry(extra: Int, discarded: Seq[Double],
                                         contended: Boolean)
@@ -97,19 +97,44 @@ object Bench {
     */
   private[graft] val SpreadFloorSec = 0.1
 
-  /** True when a window of shots spans more than its median-scaled gate
-    * fraction AND more than the absolute floor — the retry trigger and
-    * the residual `contended` flag. The gate fraction tightens from
-    * SpreadGate to SpreadGateHeavy once the median clears
-    * HeavyMedianSec (see those constants for the rationale).
+  /** The spread a window of shots may span before it is suspect: its
+    * median-scaled gate fraction, but never less than the absolute
+    * floor. The fraction tightens from SpreadGate to SpreadGateHeavy
+    * once the median clears HeavyMedianSec (see those constants for the
+    * rationale).
+    */
+  private def allowance(ts: Seq[Double]): Double = {
+    val med = median(ts)
+    val gate = if (med > HeavyMedianSec) SpreadGateHeavy else SpreadGate
+    math.max(SpreadFloorSec, gate * med)
+  }
+
+  /** True when a window of shots spans more than its [[allowance]] —
+    * the retry trigger.
     */
   private[graft] def gated(ts: Seq[Double]): Boolean =
-    ts.length >= 2 && {
-      val spread = ts.max - ts.min
-      val med = median(ts)
-      val gate = if (med > HeavyMedianSec) SpreadGateHeavy else SpreadGate
-      spread > gate * med && spread > SpreadFloorSec
-    }
+    ts.length >= 2 && ts.max - ts.min > allowance(ts)
+
+  /** The reported window of a query's shots (`runs` of them are the
+    * base run, any beyond are gated extras) and its retry record, None
+    * for a quiet query that took no extra shot. The number is
+    * `contended` when the kept window is still gated, OR when a
+    * discarded shot is FASTER than the window's minimum by more than
+    * the window's allowance: the tightest window then sat in a
+    * contended stretch and threw away the quiet shots (VERDICT r22 #3).
+    * Discarding slower shots is the selection working as designed.
+    */
+  private[graft] def settle(shots: Seq[Double], runs: Int)
+      : (Seq[Double], Option[Retry]) = {
+    val window = tightestWindow(shots, runs)
+    val discarded = shots.diff(window).sorted
+    val contended = gated(window) ||
+      discarded.exists(d => window.min - d > allowance(window))
+    val extra = shots.size - window.size
+    (window,
+      if (extra > 0 || contended) Some(Retry(extra, discarded, contended))
+      else None)
+  }
 
   /** Unpersist every registered RDD block — the shared pre-shot hygiene
     * of both benches (see the call site in main() for the measured
@@ -235,11 +260,8 @@ object Bench {
         // encoding must be the single story the artifact tells
         if (failed) name -> Seq.empty[Double]
         else {
-          val window = tightestWindow(times.toSeq, runs)
-          val stillGated = gated(window)
-          if (extra > 0 || stillGated)
-            retryInfo += name -> Retry(extra, times.toSeq.diff(window).sorted,
-              stillGated)
+          val (window, retry) = settle(times.toSeq, runs)
+          retry.foreach(retryInfo += name -> _)
           name -> window
         }
       }
@@ -270,25 +292,13 @@ object Bench {
     val retries = retryInfo.result()
     val json = fullJson(results, errors, total, sfDir, runs, setupSec, canary,
       retries)
-    // Line ORDER (r22, per the r21 verdict's differ finding): compact
-    // line FIRST, full-format line LAST. The r21 per-query diff came up
-    // empty because the rounds' artifacts mixed formats; a last-line
-    // parser must see the full-name record, so it now closes stdout.
-    // Both lines carry the same {"metric":...,"queries":...} contract;
-    // the compact one still fits whole inside a bounded tail window
-    // (short qNN keys + integer-ms values, guarded by BenchEncodeSpec),
-    // and bench_result.json keeps the full-fidelity record either way.
-    println(compactJson(results, errors.size, total, sfDir, runs, setupSec,
-      canary, retries))
     Files.writeString(Paths.get("bench_result.json"), json + "\n")
     println(json)
     System.out.flush()
     // A session with ANY erroring query must not exit 0 — round 11
     // published rc:0 beside errors:7, so anything gating on exit status
     // (CI, a bench loop) read a broken run as green (ADVICE r11). Exit
-    // AFTER both artifacts are written and stdout is flushed: the forked
-    // runner's extra "[error] Nonzero exit code" noise lands after the
-    // compact line and is budgeted for in compactJson's maxLen.
+    // AFTER the record is written and stdout is flushed.
     if (errors.nonEmpty) sys.exit(1)
   }
 
@@ -318,14 +328,8 @@ object Bench {
     case c if c < ' ' => " "; case c => c.toString
   }
 
-  /** Seconds with 3 decimals, locale-pinned (a comma decimal separator
-    * from a non-ROOT default locale would corrupt the JSON).
-    */
-  private[graft] def fmt3(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
-
   /** Full-name, full-precision record — written to `bench_result.json`
-    * and printed once for human log readers. Per query: median/min/max
+    * and printed as Bench's one stdout line. Per query: median/min/max
     * seconds plus every raw run (so any future "X× regression" claim can
     * be checked against the raw distribution, not a point estimate).
     */
@@ -362,212 +366,5 @@ object Bench {
     val gate = s""","gate":{"base":$SpreadGate,"heavy":$SpreadGateHeavy,""" +
       s""""heavy_min_s":$HeavyMedianSec,"floor_s":$SpreadFloorSec}"""
     s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"stream_setup_s":$setupSec$can$gate,"queries":$qs,"errors":$errJson,"sf":"${esc(sfDir)}"}"""
-  }
-
-  /** Compact single line for the driver's bounded tail window.
-    *
-    * Encoding (documented by the in-line "enc" field): `queries` maps the
-    * dense `qNN` prefix (unique by ContractSpec's dense-numbering guard)
-    * to the MEDIAN in integer milliseconds (-1 = error); `dmin` and
-    * `spread` are positional arrays in `queries` (= sorted-name) order,
-    * also integer ms: `dmin[i]` = median−min (so min = median−dmin) and
-    * `spread[i]` = max−min. `value` stays the sum of medians in seconds;
-    * `setup` is the streaming fixed-cost probe median in seconds; `can`
-    * is the CPU canary in integer ms (single_start, par_start,
-    * single_end, par_end — see main()); when the spread gate fired,
-    * `rt` = total extra shots and `cont` = count of queries whose best
-    * window still exceeds the gate (both omitted on a quiet run).
-    *
-    * Tail budget: the driver keeps 2000 chars and sbt appends ~70 chars
-    * of `[success]` noise (or ~150 of exit-code noise on an erroring
-    * run), so the line must stay under 1800. Degradation order when the
-    * full triple overflows (e.g. a much larger query set): drop `dmin`
-    * first (min is the least load-bearing of the three), then the
-    * positional `spread` collapses to the SPARSE `spreadx` object (only
-    * spreads above the jitter floor — what BenchDiff actually acts on),
-    * then spreadx truncates to its top-N noisiest entries, then medians
-    * shed a digit (integer CENTISECONDS, r14 — the tail consumer grades
-    * coarse wall-clock; ms fidelity stays in bench_result.json) to buy
-    * the envelope back, and only past that do cs medians ride alone.
-    * Error messages live in `bench_result.json`; only the COUNT rides
-    * here.
-    */
-  private[graft] def compactJson(results: Seq[(String, Seq[Double])],
-                                 nErrors: Int, total: Double,
-                                 sfDir: String, runs: Int,
-                                 setupSec: Double,
-                                 canary: Seq[Double] = Nil,
-                                 retries: Map[String, Retry] = Map.empty)
-      : String = {
-    // 2000-char driver tail, minus ~70 chars of sbt `[success]` noise on
-    // a clean run or ~150 chars of `[error] Nonzero exit code` noise when
-    // main() exits 1 on erroring queries — budget for the louder case
-    val maxLen = 1800
-    def ms(v: Double): Long = Math.round(v * 1000)
-    val qs = results.map { case (k, ts) =>
-      val m = if (ts.isEmpty) -1L else ms(median(ts))
-      s""""${esc(k.takeWhile(_ != '_'))}":$m"""
-    }.mkString("{", ",", "}")
-    val dmin = results.map { case (_, ts) =>
-      if (ts.isEmpty) 0L else ms(median(ts)) - ms(ts.min)
-    }.mkString("[", ",", "]")
-    val spread = results.map { case (_, ts) =>
-      if (ts.isEmpty) 0L else ms(ts.max) - ms(ts.min)
-    }.mkString("[", ",", "]")
-    val sf = "sf([0-9]+(?:\\.[0-9]+)?)$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse(s""""${esc(sfDir)}"""")
-    // canary rides in the always-fitting head: 4 integer-ms values
-    // (single_start, par_start, single_end, par_end) — ~30 chars that
-    // make cross-round comparability checkable from the tail alone
-    val can = if (canary.size != 4) ""
-      else s""""can":[${canary.map(ms).mkString(",")}],"""
-    // spread-gate summary (~20 chars, only when the gate fired): rt =
-    // total extra shots across the run, cont = queries whose best
-    // window still exceeds the gate. Names + discarded shots live in
-    // bench_result.json; a cont>0 line says "this session was noisy"
-    // from the tail alone. Omitted when zero so quiet-host lines stay
-    // byte-identical to the pre-gate format.
-    val rt =
-      if (retries.isEmpty) ""
-      else {
-        // contq NAMES the still-gated cells (bare keys, usually 0-2):
-        // a gate reading the driver artifact must never take a
-        // loaded-host median at face value — with the marker ON the
-        // cell, "q187 regressed 2x" and "q187 was measured under
-        // contention" are distinguishable from the tail alone
-        // (VERDICT r18 wrong-1; BenchDiff reads the same flag from
-        // bench_result.json's per-query records)
-        // capped at 12 names: the realistic case is 1-3; a session
-        // with dozens is globally junk and the `cont` COUNT already
-        // says so — an unbounded list would blow the head's budget
-        val contq = retries.toSeq.filter(_._2.contended).map(_._1).sorted
-          .take(12)
-          .map(k => s""""${esc(k.takeWhile(_ != '_').stripPrefix("q"))}"""")
-        s""""rt":${retries.valuesIterator.map(_.extra).sum},""" +
-          s""""cont":${retries.valuesIterator.count(_.contended)},""" +
-          (if (contq.isEmpty) ""
-           else s""""contq":[${contq.mkString(",")}],""")
-      }
-    // enc must describe what THIS line actually carries — when the
-    // ladder drops dmin (or spread) for the tail budget, a fixed enc
-    // string would claim fields that aren't there
-    def headQ(enc: String, q: String) =
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec",""" +
-        s""""runs":$runs,"setup":${fmt3(setupSec)},$can$rt""" +
-        s""""enc":"$enc",""" +
-        s""""queries":$q,"errors":$nErrors,"sf":$sf"""
-    def head(enc: String) = headQ(enc, qs)
-    // r14 rung: medians in integer CENTISECONDS — the driver grades
-    // coarse wall-clock and BenchDiff reads bench_result.json (full ms
-    // fidelity), so the lost digit costs nothing the tail consumer acts
-    // on, and one digit per entry buys the spreadx envelope back once
-    // the ms map alone crowds the tail (~145 queries)
-    val qsCs = results.map { case (k, ts) =>
-      val m = if (ts.isEmpty) -1L else Math.round(median(ts) * 100)
-      s""""${esc(k.takeWhile(_ != '_'))}":$m"""
-    }.mkString("{", ",", "}")
-    // sparse spread rung: only queries whose spread exceeds the jitter
-    // floor (SpreadFloorSec) carry an entry — below the floor a spread
-    // is scheduler noise, not signal (the gate itself never fires on
-    // it), so dropping it loses nothing BenchDiff acts on. BenchDiff
-    // reconstructs absent entries AT the floor (not zero), keeping the
-    // envelope conservative. This is what keeps the noise envelope in
-    // the tail window once the positional array outgrows the budget
-    // (~115 queries): typical sessions have ~10-20 above-floor spreads.
-    val floorMs = Math.round(SpreadFloorSec * 1000)
-    // above-floor spreads, noisiest first (name tiebreak): the order the
-    // top-N rung truncates in — dropping the SMALLEST noisy entries
-    // loses the least envelope (BenchDiff reconstructs absentees at the
-    // floor, so truncation only understates spreads that were barely
-    // above it)
-    val spreadEntries = results.collect {
-      case (k, ts) if ts.nonEmpty && ms(ts.max) - ms(ts.min) > floorMs =>
-        (ms(ts.max) - ms(ts.min), esc(k.takeWhile(_ != '_')))
-    }.sortBy { case (s, k) => (-s, k) }
-    def spreadxOf(es: Seq[(Long, String)]) =
-      es.map { case (s, k) => s""""$k":$s""" }.mkString("{", ",", "}")
-    val spreadx = spreadxOf(spreadEntries)
-    val full = s"""${head("q:median ms;dmin:med-min;spread:max-min ms, q-order")},"dmin":$dmin,"spread":$spread}"""
-    if (full.length <= maxLen) full
-    else {
-      val noDmin =
-        s"""${head("q:median ms;spread:max-min ms, q-order")},"spread":$spread}"""
-      if (noDmin.length <= maxLen) noDmin
-      else {
-        val sparse =
-          s"""${head(s"q:median ms;spreadx:max-min ms only >${floorMs}ms")},"spreadx":$spreadx}"""
-        if (sparse.length <= maxLen) sparse
-        else {
-          // top-N rung (r13, ~130 queries): keep the LARGEST above-floor
-          // spreads that fit — the envelope BenchDiff acts on survives
-          // for the queries where it matters most, truncation documented
-          // in enc as topN
-          def topLine(n: Int) = {
-            val es = spreadEntries.take(n)
-            s"""${head(s"q:median ms;spreadx:top${es.size} max-min ms only >${floorMs}ms")},"spreadx":${spreadxOf(es)}}"""
-          }
-          val n = (spreadEntries.size to 0 by -1)
-            .find(n => topLine(n).length <= maxLen)
-          n.filter(_ > 0).map(topLine).getOrElse {
-            // centisecond rung (r14, ~145+ queries): when even ONE ms
-            // spreadx entry no longer fits beside the ms medians, shed
-            // a digit per median instead of shedding the envelope
-            def topLineCs(n: Int) = {
-              val es = spreadEntries.take(n)
-              s"""${headQ(s"q:median cs;spreadx:top${es.size} max-min ms only >${floorMs}ms", qsCs)},"spreadx":${spreadxOf(es)}}"""
-            }
-            val nCs = (spreadEntries.size to 0 by -1)
-              .find(n => topLineCs(n).length <= maxLen)
-            nCs.filter(_ > 0).map(topLineCs).getOrElse {
-              // bare-key rung (r15, ~158 queries): every key starts
-              // with the same 'q', so the prefix carries zero
-              // information — shed it (enc documents the decode:
-              // prepend 'q') before shedding the noise envelope. 158
-              // keys buy ~160 chars ≈ a dozen spreadx entries.
-              def bare(s: String) = {
-                val k = s.takeWhile(_ != '_').stripPrefix("q")
-                esc(if (k.isEmpty) "q" else k)
-              }
-              val qsCsBare = results.map { case (k, ts) =>
-                val m =
-                  if (ts.isEmpty) -1L else Math.round(median(ts) * 100)
-                s""""${bare(k)}":$m"""
-              }.mkString("{", ",", "}")
-              val spreadBare = spreadEntries.map { case (s, k) =>
-                (s, esc(k.stripPrefix("q")))
-              }
-              def topLineBare(n: Int) = {
-                val es = spreadBare.take(n)
-                s"""${headQ(s"q:median cs keys sans q;spreadx:top${es.size} max-min ms only >${floorMs}ms", qsCsBare)},"spreadx":${spreadxOf(es)}}"""
-              }
-              val nB = (spreadBare.size to 0 by -1)
-                .find(n => topLineBare(n).length <= maxLen)
-              nB.filter(_ > 0).map(topLineBare).getOrElse {
-                // positional rung (r16, ~180 queries): with cs values
-                // at 2-4 digits the KEYS are now the budget hog —
-                // shed them entirely: "queries" becomes the cs-median
-                // ARRAY in SORTED query-name order (the decode key:
-                // the artifact is committed beside the repo whose
-                // query list names the positions), buying ~6 chars per
-                // query back for the envelope. spreadx keys stay named
-                // (bare) — a sparse map can't go positional.
-                val qvArr = results.sortBy(_._1).map { case (_, ts) =>
-                  if (ts.isEmpty) -1L else Math.round(median(ts) * 100)
-                }.mkString("[", ",", "]")
-                def topLinePos(n: Int) = {
-                  val es = spreadBare.take(n)
-                  s"""${headQ(s"q:median cs array sorted by name;spreadx:top${es.size} max-min ms only >${floorMs}ms keys sans q", qvArr)},"spreadx":${spreadxOf(es)}}"""
-                }
-                val nP = (spreadBare.size to 0 by -1)
-                  .find(n => topLinePos(n).length <= maxLen)
-                // terminal rung: positional cs medians, no envelope
-                nP.filter(_ > 0).map(topLinePos).getOrElse(
-                  s"${headQ("q:median cs array sorted by name", qvArr)}}")
-              }
-            }
-          }
-        }
-      }
-    }
   }
 }

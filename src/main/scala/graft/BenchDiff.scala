@@ -12,19 +12,14 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * ratio can't distinguish a regression from host contention, but two
   * disjoint run distributions can.
   *
-  * Accepted formats, auto-detected per file (VERDICT r10 missing-1: the
-  * driver's `BENCH_r*.json` series — the only longitudinal record the
-  * judge keeps — was rejected by the tool built to adjudicate it):
-  *  1. Bench's full `bench_result.json` (per-query median/min/max +
-  *     raw runs, seconds);
-  *  2. Bench's COMPACT stdout line (qNN keys, integer-ms medians,
-  *     positional `dmin`/`spread` arrays — see `Bench.compactJson`);
-  *  3. the driver wrapper `{"n":…,"rc":…,"tail":…,"parsed":{compact}}`,
-  *     read via `parsed`, falling back to the last parseable line of
-  *     `tail` when `parsed` is absent.
+  * Accepted formats, auto-detected per file:
+  *  1. Bench's `bench_result.json` (per-query median/min/max + raw
+  *     runs, seconds);
+  *  2. the driver wrapper `{"n":…,"rc":…,"tail":…,"parsed":{…}}` whose
+  *     `parsed` holds that same record (VERDICT r10 missing-1: the
+  *     driver's `BENCH_r*.json` series is the longitudinal record).
   * Query keys are normalized to the dense `qNN` prefix (unique by
-  * ContractSpec's numbering guard) so full and compact artifacts
-  * cross-compare.
+  * ContractSpec's numbering guard), so a renamed query still joins.
   *
   * Decision rule, per query: a change is significant only when the run
   * ranges are disjoint by a margin — regression if `new.min > old.max ×
@@ -33,11 +28,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * observed old run must be faster than every observed new run by 30%
   * before we call it a regression. Everything else is "within noise" —
   * which is a finding too: it's what makes "no regression" claimable.
-  * Compact artifacts that carry `spread` but not `dmin` get the
-  * conservative envelope [median−spread, median+spread] (a superset of
-  * the true [min, max], so the disjoint test can only get MORE
-  * conservative, never less); a compact line that degraded to medians
-  * only compares point estimates against the margin.
   *
   * Usage: `runMain graft.BenchDiff old.json new.json [margin]`. Prints
   * one JSON line; exit code 1 iff any regression is flagged, so the diff
@@ -48,118 +38,40 @@ object BenchDiff {
   final case class Stats(median: Double, min: Double, max: Double,
                          contended: Boolean = false)
 
-  /** Dense-prefix key ("q01_hourly_count" → "q01"): the join key between
-    * full-format and compact-format artifacts.
+  /** Dense-prefix key ("q01_hourly_count" → "q01"): the join key
+    * between two artifacts.
     */
   private def short(name: String): String = name.takeWhile(_ != '_')
 
-  /** Unwrap the driver's `BENCH_r*.json` envelope: prefer `parsed` (the
-    * driver's own parse of Bench's compact final line); if absent, scan
-    * `tail` bottom-up for the last line that parses as a JSON object
-    * with a `queries` field (the tail is a raw 2000-char stdout window —
-    * its first line is usually cut mid-JSON). Any other root passes
+  /** Unwrap the driver's `BENCH_r*.json` envelope via `parsed` (the
+    * driver's own parse of Bench's stdout line). Any other root passes
     * through unchanged.
     */
-  private[graft] def unwrap(root: JsonNode, mapper: ObjectMapper): JsonNode = {
+  private[graft] def unwrap(root: JsonNode): JsonNode =
     if (root.path("queries").isObject) root
     else if (root.path("parsed").path("queries").isObject) root.path("parsed")
-    else if (root.path("tail").isTextual) {
-      root.path("tail").asText().split('\n').reverseIterator
-        .map(_.trim).filter(l => l.startsWith("{") && l.endsWith("}"))
-        .flatMap { l =>
-          try Some(mapper.readTree(l)) catch { case _: Exception => None }
-        }
-        .find(_.path("queries").isObject)
-        .getOrElse(root)
-    } else root
-  }
+    else root
 
-  private[graft] def queryStats(root: JsonNode): Map[String, Stats] = {
-    val qs = root.path("queries")
-    val fields = qs.properties().asScala.toSeq
-    val isCompact = fields.exists(_.getValue.isNumber)
-    if (!isCompact) {
-      fields.map { e =>
-        val v = e.getValue
-        short(e.getKey) -> Stats(v.path("median").asDouble(-1),
-          v.path("min").asDouble(-1), v.path("max").asDouble(-1),
-          // Bench's spread gate marks a query whose best window still
-          // exceeds the gate — carried through so a verdict built on a
-          // soft number says so
-          v.path("contended").asBoolean(false))
-      }.toMap
-    } else {
-      // compact line: integer-ms medians keyed qNN; dmin/spread are
-      // positional arrays in the queries-map order (Jackson preserves
-      // field order). Reconstruct a seconds envelope per the ladder
-      // documented on Bench.compactJson.
-      def arr(name: String): Option[IndexedSeq[Double]] = {
-        val a = root.path(name)
-        if (a.isArray && a.size == fields.size)
-          Some(a.asScala.map(_.asDouble(0)).toIndexedSeq)
-        else None
-      }
-      val dmin = arr("dmin")
-      val spread = arr("spread")
-      // sparse rung: `spreadx` object keyed qNN, carrying only spreads
-      // above Bench's jitter floor — absent entries are reconstructed
-      // AT the floor (their true spread is anywhere in [0, floor], and
-      // assuming 0 would let two quiet fast queries read as disjoint
-      // when their real envelopes overlap)
-      val spreadx: Option[Map[String, Double]] = {
-        val sx = root.path("spreadx")
-        if (sx.isObject)
-          Some(sx.properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble(0)).toMap)
-        else None
-      }
-      val floorMs = Bench.SpreadFloorSec * 1000
-      fields.zipWithIndex.map { case (e, i) =>
-        val mMs = e.getValue.asDouble(-1)
-        val stats =
-          if (mMs < 0) Stats(-1, -1, -1) // error sentinel
-          else {
-            val m = mMs / 1000.0
-            (dmin, spread) match {
-              case (Some(d), Some(s)) =>
-                val mn = (mMs - d(i)) / 1000.0
-                Stats(m, mn, mn + s(i) / 1000.0)
-              case (None, Some(s)) => // conservative superset envelope
-                Stats(m, math.max(0.0, (mMs - s(i)) / 1000.0),
-                  (mMs + s(i)) / 1000.0)
-              case _ => spreadx match {
-                case Some(sx) =>
-                  val s = sx.getOrElse(short(e.getKey), floorMs)
-                  Stats(m, math.max(0.0, (mMs - s) / 1000.0),
-                    (mMs + s) / 1000.0)
-                case None => Stats(m, m, m) // medians-only degradation
-              }
-            }
-          }
-        short(e.getKey) -> stats
-      }.toMap
-    }
-  }
+  private[graft] def queryStats(root: JsonNode): Map[String, Stats] =
+    root.path("queries").properties().asScala.map { e =>
+      val v = e.getValue
+      short(e.getKey) -> Stats(v.path("median").asDouble(-1),
+        v.path("min").asDouble(-1), v.path("max").asDouble(-1),
+        // Bench's spread gate marks a query whose number is soft —
+        // carried through so a verdict built on it says so
+        v.path("contended").asBoolean(false))
+    }.toMap
 
-  /** Best single-thread canary time of a run, if the artifact has one.
-    * Bench's full format emits `canary.single_s` as [start, end]
-    * seconds; the compact line carries `can` as integer ms
-    * [single_start, par_start, single_end, par_end]. Min of the single
-    * probes = the least contended moment of the session.
+  /** Best single-thread canary time of a run, if the artifact has one:
+    * Bench emits `canary.single_s` as [start, end] seconds. Min of the
+    * two probes = the least contended moment of the session.
     */
   private[graft] def canarySingleMin(root: JsonNode): Option[Double] = {
     val arr = root.path("canary").path("single_s")
     if (arr.isArray && !arr.isEmpty)
       Some(arr.asScala.map(_.asDouble(Double.MaxValue)).min)
         .filter(_ > 0).filter(_ < Double.MaxValue)
-    else {
-      val can = root.path("can")
-      if (can.isArray && can.size == 4)
-        Some(math.min(can.get(0).asDouble(Double.MaxValue),
-          can.get(2).asDouble(Double.MaxValue)) / 1000.0)
-          .filter(_ > 0).filter(_ < Double.MaxValue)
-      else None
-    }
+    else None
   }
 
   sealed trait Verdict
@@ -174,10 +86,9 @@ object BenchDiff {
     * A query that RAN in the old artifact and errors in the new one
     * (Bench's -1 sentinels) is the worst regression there is, not
     * noise — it fails the gate. The error check keys off the MEDIAN
-    * sentinel, not min: a compact spread-only envelope legitimately
-    * clamps min to 0 when spread ≥ median, and reading that as "errored"
-    * reported 13 live queries as newly_errored on the first r09/r10
-    * driver-artifact diff.
+    * sentinel, not min: a min of 0 is a measurement, and reading it as
+    * "errored" reported 13 live queries as newly_errored on the first
+    * r09/r10 driver-artifact diff.
     */
   private[graft] def classify(old: Stats, nw: Stats,
                               margin: Double): Verdict =
@@ -270,7 +181,7 @@ object BenchDiff {
       s"margin must be >= 1.0 (a multiplicative tolerance), got $margin")
     val mapper = new ObjectMapper()
     def root(p: String) =
-      unwrap(mapper.readTree(Files.readString(Paths.get(p))), mapper)
+      unwrap(mapper.readTree(Files.readString(Paths.get(p))))
     val (oldRoot, newRoot) = (root(pos(0)), root(pos(1)))
     val (oldStats0, newStats) = (queryStats(oldRoot), queryStats(newRoot))
     val rawCanaries = (canarySingleMin(oldRoot), canarySingleMin(newRoot))
@@ -286,8 +197,8 @@ object BenchDiff {
     if (common.isEmpty || !usable) {
       System.err.println(s"BenchDiff: no comparable queries between " +
         s"${pos(0)} (${oldStats.size}) and ${pos(1)} (${newStats.size}) " +
-        "- expected Bench's bench_result.json, its compact line, or a " +
-        "driver BENCH_r*.json wrapper")
+        "- expected Bench's bench_result.json or a driver BENCH_r*.json " +
+        "wrapper")
       sys.exit(2)
     }
     val (json, hasRegression) =

@@ -2046,9 +2046,7 @@ object RelEntry {
       val q = src.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
           min(col("cents")).as("lo"), max(col("cents")).as("hi"))
-      require(q.queryExecution.executedPlan.toString
-        .contains(new java.io.File(dir).getName),
-        "q180: the MV rewrite did not fire")
+      require(MvCatalog.scansDir(q, dir), "q180: the MV rewrite did not fire")
       core.Materialize.detached(q) {
         MvCatalog.unregister("graft_q180")
         new org.apache.hadoop.fs.Path(dir)
@@ -2102,8 +2100,7 @@ object RelEntry {
           sum(col("price_cents")).as("cents"),
           min(col("price_cents")).as("lo"),
           max(col("price_cents")).as("hi"))
-      require(q.queryExecution.executedPlan.toString
-        .contains(new java.io.File(mdir).getName),
+      require(MvCatalog.scansDir(q, mdir),
         "q181: the rewrite did not serve the refreshed MV")
       core.Materialize.detached(q) {
         MvCatalog.unregister("graft_q181")

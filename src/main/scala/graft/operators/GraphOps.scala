@@ -203,13 +203,15 @@ object GraphOps {
     * and each round needs exactly that — degrees over the shrinking
     * edge set.
     *
-    * Scale (100 TB): per round one map-side-combined degree aggregate
-    * plus two semi-joins keyed on node ids — everything
-    * shuffle-partitioned and GROWING WITH THE DATA, nothing collected
-    * or broadcast; the edge set only shrinks. The q71/q109 iteration
-    * discipline applies verbatim: persist per round, unpersist the
-    * previous, localCheckpoint the result so downstream plans don't
-    * replay `rounds` join rounds of lineage.
+    * Scale (100 TB): per round one map-side-combined degree aggregate,
+    * whose below-k nodes (the dropped set) are localCheckpointed, plus
+    * two anti-joins of the edge set against that dropped set — small
+    * enough that AQE can broadcast it at runtime, and shuffled when a
+    * round drops a large node mass; nothing is collected to the driver
+    * and the edge set only shrinks. The q71/q109 iteration discipline
+    * applies verbatim: persist per round, unpersist the previous,
+    * localCheckpoint the result so downstream plans don't replay
+    * `rounds` join rounds of lineage.
     */
   def kCorePeel(edges0: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan,
   Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 
 /** Transparent materialized-view rewrite — the warehouse feature that
@@ -157,6 +159,24 @@ object MvCatalog {
     newMv.write.mode("overwrite").parquet(old.path)
     registerSignature(name, snapshot, old.keys, old.measures, old.path)
   }
+
+  /** Whether `df`'s physical plan reads `dir` through a file scan —
+    * the proof that a rewrite served the MV stored there. It reads the
+    * scans' root paths off the plan tree (through AQE and subqueries),
+    * never the plan string: Spark abbreviates long paths in plan
+    * strings (`spark.sql.maxMetadataStringLength`), so a string check
+    * fails whenever the directory is deep.
+    */
+  def scansDir(df: DataFrame, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val want = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+      .makeQualified(p)
+    PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+    }.flatten.contains(want)
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   private[plans] def find(child: LogicalPlan): Option[MvDef] = {
     if (views.isEmpty) return None

@@ -1,18 +1,11 @@
 package graft
 
-/** Guards the driver-facing bench line. The driver stores only the LAST
-  * 2000 characters of stdout (BENCH_r0{1,2,3}.json each carry a "tail"
-  * of exactly 2000 chars, cut mid-line) and parses the bench JSON out of
-  * that window — so the final printed line must fit the window whole,
-  * with headroom for sbt's trailing `[success] Total time: ...` line
-  * (~70 chars). The full-precision record lives in `bench_result.json`;
-  * only the compact line faces the tail budget.
+/** Guards Bench's one record, `bench_result.json` (also its single
+  * stdout line), and the shot-selection rules whose output it carries:
+  * the median, the tightest window, the spread gate and the contended
+  * flag.
   */
 class BenchEncodeSpec extends SparkTestBase {
-
-  private def fakeResults(n: Int, runs: Seq[Double] = Seq(12.301, 12.355, 12.498))
-      : Seq[(String, Seq[Double])] =
-    (1 to n).map(i => (f"q$i%02d_some_descriptive_query_name", runs))
 
   test("median: odd picks middle, even averages, order-independent") {
     assert(Bench.median(Seq(3.0, 1.0, 2.0)) === 2.0)
@@ -20,124 +13,10 @@ class BenchEncodeSpec extends SparkTestBase {
     assert(Bench.median(Seq(7.0)) === 7.0)
   }
 
-  test("compact line fits the 2000-char tail window at 120 queries") {
-    val line = Bench.compactJson(fakeResults(120), nErrors = 0,
-      total = 1234.5678, sfDir = "/root/testdata/sf0.1", runs = 3,
-      setupSec = 0.85)
-    assert(line.length <= 1800, s"compact bench line too long: ${line.length}")
-    assert(!line.contains('\n'))
-    // degradation must keep the medians and (if anything beyond them
-    // fits) the spread — dmin is the first casualty
-    assert(line.contains(""""queries":{"""))
-  }
-
-  test("compact line carries the canary in integer ms and stays in budget") {
-    val can = Seq(0.219, 0.442, 0.167, 0.325)
-    val line = Bench.compactJson(fakeResults(120), nErrors = 0,
-      total = 1234.5678, sfDir = "/root/testdata/sf0.1", runs = 3,
-      setupSec = 0.85, canary = can)
-    assert(line.length <= 1800, s"compact bench line too long: ${line.length}")
-    assert(line.contains(""""can":[219,442,167,325],"""))
-    // and the full-precision twin names the arrays
-    val full = Bench.fullJson(fakeResults(2), Nil, 1.0, "/x", 3, 0.1, can)
-    assert(full.contains(""""canary":{"single_s":[0.219,0.167],"par_s":[0.442,0.325]}"""))
-  }
-
-  test("compact line for the CURRENT query set degrades as designed") {
-    // two distinct shot profiles: a quiet one (47 ms spread, below the
-    // 100 ms jitter floor) and a noisy one (700 ms spread)
-    val names = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex
-      .map { case (n, i) =>
-        (n, if (i % 7 == 0) Seq(3.141, 3.402, 3.841)
-            else Seq(3.141, 3.102, 3.149))
-      }
-    val line = Bench.compactJson(names, nErrors = 2, total = 99.999,
-      sfDir = "/root/testdata/sf0.1", runs = 3, setupSec = 0.85)
-    // 1800 is the real contract: the driver's 2000-char tail minus
-    // sbt's trailer — ~80 chars of `[success] Total time ...` on a clean
-    // run, ~150 chars of `[error] Nonzero exit code ...` now that main()
-    // exits 1 when any query errors. At 103 queries the full
-    // median+dmin+spread triple outgrew it (r10); at 118 the positional
-    // spread array does too, so the ladder's next rung is the SPARSE
-    // spreadx object — medians plus the above-floor noise envelope
-    // (what BenchDiff acts on) survive, full fidelity stays in
-    // bench_result.json.
-    assert(line.length <= 1800, s"compact bench line too long: ${line.length}")
-    // named-map rungs carry "queries":{...}; the r16 positional rung
-    // (~180 queries: the keys themselves became the budget hog) carries
-    // the cs-median ARRAY in sorted-name order instead
-    assert(line.contains(""""queries":{""") ||
-      line.contains(""""queries":["""), line.takeRight(200))
-    // at ~130 queries the full sparse object itself outgrows the tail
-    // (topN rung); at ~145 the ms medians alone crowd out even one
-    // spreadx entry, so medians shed a digit (centiseconds, r14) to buy
-    // the envelope back — in EVERY rung the noise envelope survives
-    // for the queries where BenchDiff needs it most
-    assert(line.contains(""""spreadx":{"""), line.takeRight(400))
-    // noisy queries (spread 700 ms) carry entries; quiet ones don't
-    // (keys read "q01" on the named rungs, "01" on the bare-key rung)
-    assert(line.contains(""""q01":700""") || line.contains(""""01":700"""),
-      line.takeRight(400)) // spreadx keys stay named on every rung
-    assert(!line.contains(""""q02":4""") && !line.contains(""""02":4,"""),
-      "below-floor spread leaked")
-    // enc must describe the degraded line, not the full triple
-    assert(line.contains(""""enc":"q:median ms;spreadx:top""") ||
-      line.contains(""""enc":"q:median cs;spreadx:top""") ||
-      line.contains(""""enc":"q:median cs keys sans q;spreadx:top""") ||
-      line.contains(""""enc":"q:median cs array sorted by name;spreadx:top""") ||
-      line.contains(""""enc":"q:median ms;spreadx:max-min ms only >100ms""""),
-      line.take(300))
-    // the cs rung really is centiseconds: the quiet medians (3141 ms)
-    // read 314 when enc says cs
-    if (line.contains(""""enc":"q:median cs;""") ||
-        line.contains(""""enc":"q:median cs keys"""))
-      assert(line.contains(""""q02":314""") || line.contains(""""02":314"""),
-        line.take(400))
-    // the positional rung really is centiseconds in sorted order: the
-    // quiet medians (3141 ms) read 314 somewhere in the array
-    if (line.contains("cs array sorted by name"))
-      assert(line.contains(""",314,"""), line.take(400))
-    assert(!line.contains("dmin"), "dropped field must vanish from enc too")
-    val full = Bench.fullJson(names.take(2), Nil, 1.0, "/x", 3, 0.1, Nil)
-    assert(full.contains(""""min":"""), "per-run fidelity must stay in bench_result.json")
-  }
-
-  test("compact line is valid JSON shape with the contract keys") {
-    val line = Bench.compactJson(
-      Seq(("q01_agg", Seq(0.5, 0.6, 0.4)), ("q02_x", Nil)),
-      nErrors = 1, total = 0.5, sfDir = "/root/testdata/sf0.01", runs = 3,
-      setupSec = 0.2)
-    assert(line.startsWith("""{"metric":"total","value":0.500,"unit":"sec","runs":3,"setup":0.200,"""))
-    // median of (0.4,0.5,0.6) = 0.5 → 500 ms; failed query = -1
-    assert(line.contains(""""queries":{"q01":500,"q02":-1}"""), line)
-    // dmin = 500-400 = 100 ms (0 for the failed query); spread = 200 ms
-    assert(line.contains(""""dmin":[100,0]"""), line)
-    assert(line.contains(""""spread":[200,0]"""), line)
-  }
-
-  test("sf token is always valid JSON, even for odd directory names") {
-    // "sf0.1." used to emit the bare token `0.1.` — invalid JSON
-    def compact(dir: String) =
-      Bench.compactJson(Nil, 0, 0.0, dir, runs = 3, setupSec = 0.0)
-    for (dir <- Seq("/data/sf0.1.", "/data/sfX", "/data/sf.5", "/data/"))
-      assert(compact(dir).contains(s""""sf":"${dir.replace("\\", "\\\\")}""""),
-        s"non-numeric sf dir must fall back to a quoted string: $dir")
-    assert(compact("/data/sf0.1").contains(""""sf":0.1"""))
-    assert(compact("/data/sf1").contains(""""sf":1"""))
-  }
-
   test("qNN prefixes stay unique after truncation (driver keys by them)") {
     val keys = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
     assert(keys.size === SparkEntry.queries.size,
-      "two query names share a qNN prefix — compact line would collide")
-  }
-
-  test("locale-pinned formatting never emits a comma decimal separator") {
-    val prev = java.util.Locale.getDefault
-    try {
-      java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      assert(Bench.fmt3(1.5) === "1.500")
-    } finally java.util.Locale.setDefault(prev)
+      "two query names share a qNN prefix — BenchDiff's join would collide")
   }
 
   test("tightestWindow picks the minimum-spread k-window, fastest on tie") {
@@ -171,6 +50,27 @@ class BenchEncodeSpec extends SparkTestBase {
     assert(!Bench.gated(Seq(1.6, 1.9, 2.3)))
   }
 
+  test("contended: a discarded faster shot flags the kept window") {
+    // the tightest window sat in a contended stretch and threw away the
+    // two quiet shots: 0.88 - 0.16 = 0.72 > 0.5 × 0.94
+    val (window, retry) = Bench.settle(Seq(0.16, 0.16, 0.88, 0.94, 1.02), 3)
+    assert(window === Seq(0.88, 0.94, 1.02))
+    assert(retry === Some(Bench.Retry(2, Seq(0.16, 0.16), contended = true)))
+    // one slow outlier discarded: the selection working as designed
+    val (w2, r2) = Bench.settle(Seq(1.0, 1.05, 1.1, 6.3), 3)
+    assert(w2 === Seq(1.0, 1.05, 1.1))
+    assert(r2 === Some(Bench.Retry(1, Seq(6.3), contended = false)))
+    // a faster discard inside the allowance is jitter, not contention
+    // (1.0 - 0.9 = 0.1 < 0.5 × 1.05)
+    assert(!Bench.settle(Seq(0.9, 1.0, 1.05, 1.1), 3)._2.exists(_.contended))
+    // a quiet query with no extra shot carries no retry record
+    assert(Bench.settle(Seq(1.0, 1.1, 1.05), 3) ===
+      (Seq(1.0, 1.05, 1.1), None))
+    // a still-gated window stays contended with nothing discarded
+    assert(Bench.settle(Seq(1.0, 1.1, 1.7), 3)._2 ===
+      Some(Bench.Retry(0, Nil, contended = true)))
+  }
+
   test("retry record rides bench_result.json; quiet lines are unchanged") {
     val retries = Map("q01_agg" ->
       Bench.Retry(extra = 1, discarded = Seq(6.3), contended = false))
@@ -179,35 +79,11 @@ class BenchEncodeSpec extends SparkTestBase {
       retries = retries)
     assert(full.contains(""""retries":1,"discarded":[6.3],"contended":false"""),
       full)
-    val compact = Bench.compactJson(Seq(("q01_agg", Seq(0.5, 0.6, 0.4))),
-      nErrors = 0, total = 0.5, sfDir = "/x", runs = 3, setupSec = 0.2,
-      canary = Nil, retries = Map("q01_agg" ->
-        Bench.Retry(2, Seq(6.3, 7.1), contended = true)))
-    assert(compact.contains(""""rt":2,"cont":1,"""), compact)
-    // the still-gated cell is NAMED in the tail (bare key): a gate
-    // reading the driver artifact can tell "regressed" from "measured
-    // under contention" per cell
-    assert(compact.contains(""""contq":["01"],"""), compact)
-    // no retries → both artifacts byte-identical to the pre-gate format
-    val quiet = Bench.compactJson(Seq(("q01_agg", Seq(0.5, 0.6, 0.4))),
-      nErrors = 0, total = 0.5, sfDir = "/x", runs = 3, setupSec = 0.2)
-    assert(!quiet.contains("\"rt\"") && !quiet.contains("\"cont\""))
-  }
-
-  test("compact line stays in budget with the gate summary at 120 queries") {
-    val retries = (1 to 120).map(i =>
-      f"q$i%02d_some_descriptive_query_name" ->
-        Bench.Retry(2, Seq(9.9, 9.8), contended = true)).toMap
-    val line = Bench.compactJson(fakeResults(120), nErrors = 0,
-      total = 1234.5678, sfDir = "/root/testdata/sf0.1", runs = 3,
-      setupSec = 0.85, canary = Seq(0.219, 0.442, 0.167, 0.325),
-      retries = retries)
-    assert(line.length <= 1800, s"compact bench line too long: ${line.length}")
-    assert(line.contains(""""rt":240,"cont":120,"""))
-    // contq caps at 12 names — a session with 120 gated cells is
-    // globally junk and the count already says so
-    assert("\"contq\":\\[([^\\]]*)\\]".r.findFirstMatchIn(line)
-      .exists(_.group(1).split(',').length == 12), line)
+    // no retries → no retry fields: a quiet record keeps the pre-gate shape
+    val quiet = Bench.fullJson(Seq(("q01_agg", Seq(0.5, 0.6, 0.4))),
+      Nil, 0.5, "/x", runs = 3, setupSec = 0.2)
+    assert(!quiet.contains("\"retries\"") && !quiet.contains("\"contended\""),
+      quiet)
   }
 
   test("full json carries every raw run per query") {
@@ -215,6 +91,20 @@ class BenchEncodeSpec extends SparkTestBase {
       Nil, 0.5, "/data/sf0.1", runs = 3, setupSec = 0.2)
     assert(line.contains(""""q01_agg":{"median":0.5,"min":0.4,"max":0.6,"runs":[0.5,0.6,0.4]}"""), line)
     assert(line.contains(""""stream_setup_s":0.2"""), line)
+    // one line, so the stdout copy is the whole record
+    assert(!line.contains('\n'))
+    // the canary's start/end probes ride as named arrays
+    val can = Seq(0.219, 0.442, 0.167, 0.325)
+    val withCan = Bench.fullJson(Seq(("q01_agg", Seq(0.5))), Nil, 0.5, "/x",
+      runs = 1, setupSec = 0.1, canary = can)
+    assert(withCan.contains(""""canary":{"single_s":[0.219,0.167],"par_s":[0.442,0.325]}"""),
+      withCan)
+    // an erroring query keeps its -1 sentinels and its message
+    val failed = Bench.fullJson(Seq(("q02_x", Nil)), List("q02_x" -> "boom"),
+      0.0, "/x", runs = 3, setupSec = 0.1)
+    assert(failed.contains(""""q02_x":{"median":-1,"min":-1,"max":-1,"runs":[]}"""),
+      failed)
+    assert(failed.contains(""""errors":{"q02_x":"boom"}"""), failed)
   }
 
   test("ExplainAudit.nodeCounts: node names only, codegen stars and headers stripped") {

@@ -30,7 +30,7 @@ class MvRewriteSpec extends SparkTestBase {
       // view grain: the plan must scan the MV files, not the base table
       val q = grain("o_orderstatus", "o_orderpriority")
       val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains(new java.io.File(dir).getName),
+      assert(MvCatalog.scansDir(q, dir),
         s"rewrite did not fire:\n${plan.take(800)}")
       assert(!plan.contains("orders.parquet"),
         s"rewritten plan still scans the base table:\n${plan.take(800)}")
@@ -38,8 +38,7 @@ class MvRewriteSpec extends SparkTestBase {
 
       // rollup grain: (status, priority) partials answer GROUP BY status
       val roll = grain("o_orderstatus")
-      assert(roll.queryExecution.executedPlan.toString
-        .contains(new java.io.File(dir).getName), "rollup grain did not rewrite")
+      assert(MvCatalog.scansDir(roll, dir), "rollup grain did not rewrite")
       val gotRoll = roll.collect().map(_.toSeq).toSet
 
       // non-derivable shapes stay on the base table
@@ -78,8 +77,7 @@ class MvRewriteSpec extends SparkTestBase {
       val sqlQ = spark.sql(
         """SELECT o_orderstatus, count(*) AS n, sum(cents) AS s
           |FROM mv_spec_src GROUP BY o_orderstatus""".stripMargin)
-      assert(sqlQ.queryExecution.executedPlan.toString
-        .contains(new java.io.File(dir).getName),
+      assert(MvCatalog.scansDir(sqlQ, dir),
         "the SQL-text spelling did not rewrite")
       val sqlRows = sqlQ.collect().map(_.toSeq).toSet
       MvCatalog.unregister("spec_orders_mv")
@@ -88,6 +86,40 @@ class MvRewriteSpec extends SparkTestBase {
           |FROM mv_spec_src GROUP BY o_orderstatus""".stripMargin)
         .collect().map(_.toSeq).toSet)
     } finally MvCatalog.unregister("spec_orders_mv")
+  }
+
+  test("the rewrite proof reads scan paths, not the abbreviated plan string") {
+    // an MV directory deep enough that the plan string abbreviates the
+    // scan location (spark.sql.maxMetadataStringLength): a check on the
+    // plan string cannot see the directory's name there, and q180/q181
+    // failed that way whenever the temp directory was long
+    val root = java.nio.file.Files.createTempDirectory("graft_mv_deep")
+    val dir = (1 to 6).foldLeft(root)((p, i) =>
+      p.resolve(f"deeply_nested_directory_level_$i%02d"))
+      .resolve("mv_leaf_partials").toString
+    MvCatalog.register("spec_deep_mv", src,
+      Seq("o_orderstatus", "o_orderpriority"), Seq("cents"), dir)
+    try {
+      val q = src.groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("mv_leaf_partials"),
+        s"the plan string should abbreviate this path:\n${plan.take(800)}")
+      assert(MvCatalog.scansDir(q, dir), plan.take(800))
+      // neither a parent directory nor an un-rewritten plan counts
+      assert(!MvCatalog.scansDir(q, root.toString))
+      assert(!MvCatalog.scansDir(src.groupBy(col("o_orderstatus"))
+        .agg(countDistinct(col("cents")).as("nd")), dir))
+      val got = q.collect().map(_.toSeq).toSet
+      MvCatalog.unregister("spec_deep_mv")
+      assert(got == src.groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
+        .collect().map(_.toSeq).toSet)
+    } finally {
+      MvCatalog.unregister("spec_deep_mv")
+      val p = new org.apache.hadoop.fs.Path(root.toString)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
   }
 
   test("SUM over a floating-point measure declines the rewrite") {
@@ -109,8 +141,7 @@ class MvRewriteSpec extends SparkTestBase {
       val mmQ = fsrc.groupBy(col("o_orderstatus"))
         .agg(min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"))
-      assert(mmQ.queryExecution.executedPlan.toString
-        .contains(new java.io.File(dir).getName),
+      assert(MvCatalog.scansDir(mmQ, dir),
         "MIN/MAX over a double measure should still rewrite (order-free)")
       val got = mmQ.collect().map(_.toSeq).toSet
       MvCatalog.unregister("spec_fp_mv")
